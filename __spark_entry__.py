@@ -887,19 +887,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "derived_cap", F.lit(cap).cast("long")
         )
 
-    def x_dedup_components_auto(spark, sf_dir):
-        # the measured-crossover dispatcher under the driver's hash:
-        # the sf pair graph (~30 edges) sits below the 2k-edge
-        # crossover (r10 quiet-host CC ladder, STRESS.md: two-phase
-        # wins every rung ≥2.2k edges; the sub-2k fixture regime is
-        # shortcut's by a sub-second margin), so
-        # this routes through the shortcut variant — what's new under
-        # test is the localCheckpoint + count + dispatch path itself;
-        # shares the CC oracle verbatim (labels identical either way)
-        return _dd.duplicate_components_auto(
-            _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
-        )
-
     def x_join_analyzed(spark, sf_dir):
         # the manifest-stats join gate under the driver's hash: two
         # scratch ZTables (lineitem fact / part dim); join_analyzed
@@ -3194,25 +3181,8 @@ GROUP BY GROUPING SETS (
 
     def x_dedup_components(spark, sf_dir):
         # pairs → duplicate groups: transitive closure over the MinHash
-        # candidate graph (min-label propagation; recursive-CTE oracle)
+        # candidate graph (hook + shortcut; recursive-CTE oracle)
         return _dd.duplicate_components(
-            _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
-        )
-
-    def x_dedup_components_star(spark, sf_dir):
-        # same contract as x_dedup_components via large-star/small-star
-        # contraction (O(log² n) rounds on any graph shape vs diameter
-        # rounds for min-label propagation); shares the oracle
-        return _dd.duplicate_components_star(
-            _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
-        )
-
-    def x_dedup_components_htm(spark, sf_dir):
-        # same contract via Hash-to-Min (Rastogi et al. 2013): O(log n)
-        # rounds on ANY graph shape — chains included, where min-label
-        # needs diameter rounds (A/B on a 5,000-hop chain in STRESS.md);
-        # shares the siblings' recursive-CTE oracle verbatim
-        return _dd.duplicate_components_htm(
             _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
         )
 
@@ -3256,26 +3226,6 @@ GROUP BY GROUPING SETS (
         return _dd.dedup_survivors(
             emb, pairs, doc_id="vec_id"
         ).select(F.col("doc_id").alias("vec_id"))
-
-    def x_dedup_components_sc(spark, sf_dir):
-        # fourth CC implementation: hook + pointer-doubling shortcut
-        # (Shiloach-Vishkin / Kiveris et al. two-phase) — O(log n)
-        # rounds like Hash-to-Min but with LINEAR per-round state (one
-        # parent row per vertex), closing the measured path-graph
-        # blowup (STRESS.md r6); shares the CC oracle verbatim
-        return _dd.duplicate_components_shortcut(
-            _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
-        )
-
-    def x_dedup_components_2p(spark, sf_dir):
-        # fifth CC implementation: large-star/small-star alternation
-        # (Kiveris et al. 2014 Alg. 3) — the variant whose PER-ROUND
-        # cost SHRINKS with the contracting edge list; measured 1.3x
-        # over hook+shortcut and 1.9x over min-label on the 10M-doc
-        # pipeline dup graph (STRESS.md r8); shares the CC oracle
-        return _dd.duplicate_components_twophase(
-            _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
-        )
 
     def x_substring_seed_vocab(spark, sf_dir):
         # the unigram-LM trainer's seed ranking as a driver-checked
@@ -4020,7 +3970,6 @@ GROUP BY GROUPING SETS (
         x_streaming_truss_final,
         x_streaming_lsh_final,
         x_streaming_knn_final,
-        x_dedup_components_auto,
         x_join_analyzed,
         x_join_analyzed_salted,
         x_lsh_adaptive_cap,
@@ -4046,7 +3995,6 @@ GROUP BY GROUPING SETS (
         w20_ewma_daily,
         w21_acf_daily,
         t19_histogram_quantiles_by,
-        x_dedup_components_htm,
         x_pca_semdedup,
         x_ridge_betas,
         x_ridge_scores,
@@ -4105,8 +4053,6 @@ GROUP BY GROUPING SETS (
         x_conformal_coverage,
         x_conformal_by_lang,
         x_pr_curve,
-        x_dedup_components_sc,
-        x_dedup_components_2p,
         x_substring_seed_vocab,
         x_gopher_quality,
         x_semdedup_within_cell,
@@ -4234,7 +4180,6 @@ GROUP BY GROUPING SETS (
         x_dedup_ngram_jaccard,
         x_dedup_embedding,
         x_dedup_components,
-        x_dedup_components_star,
         x_dedup_survivors,
         x_ann_cosine_topk,
         x_ann_lsh_topk,
@@ -4284,17 +4229,20 @@ GROUP BY GROUPING SETS (
 #   3. staleness refresh — the registry names whose last hash-green
 #      round is oldest (computed from CORRECTNESS_r01..r09 at r10
 #      start; the full <=r4-vintage block fits this round, max
-#      evidence age after r10 <= 4 rounds), topped up with the
-#      artifact-sorted head of the r5 tier.
+#      evidence age after r10 <= 4 rounds).
 # Ordering within a tier is the artifact sort, so the list stays
 # deterministic and auditable.
 _WINDOW_PRIORITY = [
+    # changed plans: every consumer of duplicate_components, whose
+    # closure moved from min-label propagation to hook + shortcut
+    "x_dedup_components", "x_dedup_survivors", "x_dedup_survivors_quality",
+    "x_semdedup_survivors", "x_semdedup_within_cell", "x_pca_semdedup",
+    "x_leakage_splits", "x_negative_samples", "x_dedup_bcubed",
+    "x_dup_cluster_report", "x_dup_cluster_truss", "x_fuzzy_entities",
+    "x_clean_corpus",
     # r10 NEW queries (never windowed by construction):
     "x_join_analyzed_salted", "x_lsh_pairs_sharded",
     "x_lsh_greedy_rejects", "x_lsh_greedy_cross",
-    # r10-changed plan (the standing rule): clean_corpus's stage-1
-    # joins were fused into the join-free quality_lang_gate
-    "x_clean_corpus",
     # r9-changed plans: the BIGINT-div rewrite of event_day /
     # wow_growth (windows.py:41,1507) re-planned every event_day
     # consumer after their last green rows (w20/w21/spike_final were
@@ -4302,7 +4250,7 @@ _WINDOW_PRIORITY = [
     "w13_event_spikes", "w14_gapfill_locf", "w15_mad_outliers",
     "w18_supervised_examples", "w19_wow_growth", "w20_ewma_daily",
     "w21_acf_daily", "x_streaming_spike_final",
-    # the 31 stalest driver-green rows (last green r4; the r1-vintage
+    # the stalest driver-green rows (last green r4; the r1-vintage
     # "c9b_outliers_nd_ivf" row is a RETIRED name — the query was
     # renamed c9b_outliers_nd_brute in r5 and has r5+ evidence):
     "o1_topk_orders", "o2_smallest_cells_topk",
@@ -4311,16 +4259,12 @@ _WINDOW_PRIORITY = [
     "t4_true_frequent_items", "t5_reservoir_report", "t6_sticky_report",
     "w1_top_order_per_segment", "x_balanced_sample",
     "x_bpe_token_counts", "x_containment_pairs",
-    "x_dedup_jaccard_prefix", "x_dedup_snm", "x_dup_cluster_report",
+    "x_dedup_jaccard_prefix", "x_dedup_snm",
     "x_fingerprints", "x_kcore_nodes", "x_language_id",
     "x_media_metadata", "x_minhash_similarity", "x_quality_scores",
     "x_rolling_fingerprints", "x_stratified_sample", "x_token_stats",
     "x_top_ngrams", "x_triangle_counts", "x_weighted_reservoir",
     "x_weighted_reservoir_strat", "x_winnow_fingerprints",
-    # r5-vintage top-up to fill the ~50-slot window:
-    "a4_cell_neighborhood", "c10_outliers_grid3", "c2_fft_coreset",
-    "c3_mrfft_radius", "c6_exact_outliers",
-    "c7_approx_outliers_summary",
 ]
 
 
@@ -4703,9 +4647,6 @@ WHERE c.c_custkey % 100 > 20 GROUP BY 1
         "x_streaming_lsh_final": _dd.minhash_lsh_pairs_sql(),
         "x_streaming_knn_final": _sim.ivf_topk_sql(
             ANN_K, _gold.C3_CENTERS, nprobe=2
-        ),
-        "x_dedup_components_auto": _dd.duplicate_components_sql(
-            f"SELECT doc_a, doc_b FROM ({_dd.minhash_lsh_pairs_sql()})"
         ),
         # derived cap recomputed IN SQL from the corpus count — the
         # same b = sqrt(2·8·N) with floor/ceiling the Python gate
@@ -5561,18 +5502,6 @@ GROUP BY l_returnflag, l_linestatus""",
             COSINE_NEARDUP_THRESHOLD
         ),
         "x_dedup_components": _dd.duplicate_components_sql(
-            f"SELECT doc_a, doc_b FROM ({_dd.minhash_lsh_pairs_sql()})"
-        ),
-        "x_dedup_components_star": _dd.duplicate_components_sql(
-            f"SELECT doc_a, doc_b FROM ({_dd.minhash_lsh_pairs_sql()})"
-        ),
-        "x_dedup_components_htm": _dd.duplicate_components_sql(
-            f"SELECT doc_a, doc_b FROM ({_dd.minhash_lsh_pairs_sql()})"
-        ),
-        "x_dedup_components_sc": _dd.duplicate_components_sql(
-            f"SELECT doc_a, doc_b FROM ({_dd.minhash_lsh_pairs_sql()})"
-        ),
-        "x_dedup_components_2p": _dd.duplicate_components_sql(
             f"SELECT doc_a, doc_b FROM ({_dd.minhash_lsh_pairs_sql()})"
         ),
         "x_clean_corpus": _pl.clean_corpus_sql(),

@@ -118,27 +118,13 @@ BENCH_QUERIES = [
     # round-6 additions: every oracled family now has a tracked sf0.1
     # number (VERDICT r5 "What's missing" #5) — truss decomposition
     # (chained peel), SemDeDup survivors (blocked cosine pairs + CC),
-    # packed-chunk stats, and Hash-to-Min CC on its sweet-spot graph
-    # (near-dup components; see STRESS.md for the chain-graph A/B)
+    # packed-chunk stats
     "x_truss_decomposition",
     "x_semdedup_survivors",
     "x_pack_chunk_stats",
-    "x_dedup_components_htm",
     # the composed embedding-curation pipeline (scatter → eigh →
     # whiten → SemDeDup in the whitened space)
     "x_pca_semdedup",
-    # fourth CC implementation: hook+shortcut pointer doubling —
-    # O(log n) rounds AND linear state (the recommended scale path
-    # after the r6 chain-graph measurements)
-    "x_dedup_components_sc",
-    # fifth CC implementation (r8): large-star/small-star alternation —
-    # the contracting-edge-list scale path (CC ladder in STRESS.md r8)
-    "x_dedup_components_2p",
-    # the auto-dispatching closure (r9): localCheckpoint + edge count +
-    # crossover dispatch — its tracked cost vs the direct variants IS
-    # the price of the gate (should sit at shortcut + one count here,
-    # below the 2k-edge crossover of the r10 quiet-host ladder)
-    "x_dedup_components_auto",
     # the manifest-stats join gate end-to-end (r9): two scratch ZTable
     # builds + histogram ANALYZE + the gated join — the planner-loop
     # cost a catalog-backed warehouse would amortize across queries

@@ -1116,9 +1116,10 @@ def leakage_safe_splits(
     assignment is reproducible on any engine and stable under corpus
     growth for unchanged clusters.
 
-    Plan: the component labeling is the existing bounded-round
-    min-label propagation; the assignment itself is one left join plus
-    a hash expression — no extra shuffle beyond the closure.
+    Plan: the component labeling is the shared hook + shortcut
+    closure (:func:`duplicate_components`); the assignment itself is
+    one left join plus a hash expression — no extra shuffle beyond the
+    closure.
     ``components``: a precomputed ``duplicate_components(pairs)``
     table; pass it when the pipeline already ran the closure for the
     survivor step (the 10M-doc composed stress measured the repeated

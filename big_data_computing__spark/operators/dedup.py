@@ -673,101 +673,113 @@ def duplicate_components(
     max_iterations: int = 100,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph:
-    DataFrame[doc_id, component_id] for every doc appearing in a pair,
-    with component_id = min doc_id in the component.
+    DataFrame[doc_id, component_id] for every doc appearing in a pair
+    (a self-pair (x, x) included), with component_id = min doc_id in
+    the component.
 
     The missing piece between pairwise dedup (MinHash/SimHash/Jaccard/
     embedding pairs) and an actual deduplicated corpus: transitive
     closure groups A~B~C into one unit so one survivor is kept per
     group, not per pair.
 
-    Algorithm: min-label propagation to fixpoint — a driver-coordinated
-    loop of joins (the standard Spark CC shape; GraphX Pregel does the
-    same). Iterations = graph diameter, which for near-dup graphs is
-    tiny (duplicate clusters are dense and small); ``max_iterations``
-    bounds pathological chains. Each round is one shuffle join on node
-    id plus a partial+final min aggregation; the convergence check is a
-    count of changed labels (bounded driver data: one long). At 100 TB
-    the per-round shuffle is on (node, label) pairs only — never
-    documents.
+    Algorithm: hook + pointer-doubling shortcut (Shiloach & Vishkin
+    1982; the MapReduce form of Kiveris et al. 2014) in O(log n)
+    rounds with LINEAR per-round state: exactly one (v, parent) row per
+    vertex plus the static edge list. Each round (1) HOOKS every
+    vertex to the minimum parent in its closed neighborhood (one
+    edges⋈parents join + min agg) and (2) SHORTCUTS parent ←
+    parent(parent) (one parents self-join), so labels travel ~2^r hops
+    after r rounds — long duplicate chains converge as fast as dense
+    clusters. Every parent value is itself a vertex id, so the shortcut
+    self-join is total; at the fixpoint (no parent changed) parents are
+    constant per component and equal to the component min (hook would
+    fire across any unequal edge, shortcut across any unequal chain).
+    At 100 TB the per-round shuffle is on (node, node) long pairs only
+    — never documents.
 
-    Each round's labels are ``localCheckpoint``-ed, not just cached:
+    Each round's parents are ``localCheckpoint``-ed, not just cached:
     caching truncates *execution* but the logical plan still nests the
-    previous round's plan twice (propagate + union), so the lineage —
-    and with it optimizer time and the plan-description string Spark
-    builds for every action — grows exponentially with the iteration
-    count (observed: a 15-round chain graph spent >17 min inside
-    ``explainString`` before the fix). Checkpointing resets the plan to
-    a leaf each round — the standard practice for iterative DataFrame
-    algorithms (GraphFrames does the same). On a real cluster prefer
-    reliable ``checkpoint()`` if executor loss matters mid-algorithm.
+    previous round's plan several times (hook join + shortcut
+    self-join), so the lineage — and with it optimizer time and the
+    plan-description string Spark builds for every action — grows
+    exponentially with the iteration count (observed: a 15-round chain
+    graph spent >17 min inside ``explainString`` before the fix).
+    Checkpointing resets the plan to a leaf each round — the standard
+    practice for iterative DataFrame algorithms (GraphFrames does the
+    same). On a real cluster prefer reliable ``checkpoint()`` if
+    executor loss matters mid-algorithm. Raises if ``max_iterations``
+    is exhausted rather than returning partial labels.
     """
+    # self-pairs are kept: a doc whose only pair is (x, x) is its own
+    # component (the edge only ever hooks x to its own parent)
     edges = (
-        pairs.select(F.col(doc_a).alias("s"), F.col(doc_b).alias("t"))
-        .union(pairs.select(F.col(doc_b).alias("s"), F.col(doc_a).alias("t")))
+        pairs.select(F.col(doc_a).alias("v"), F.col(doc_b).alias("u"))
+        .union(
+            pairs.select(F.col(doc_b).alias("v"), F.col(doc_a).alias("u"))
+        )
         .distinct()
         # read once per round: persist, with GC-driven cleanup (lazy —
-        # round 1's convergence aggregate materializes both tables)
+        # round 1's parent-sum aggregate materializes both tables)
         .localCheckpoint(eager=False)
     )
-    labels = (
-        edges.select(F.col("s").alias("id"))
+    parents = (
+        edges.select("v")
         .distinct()
-        .select("id", F.col("id").alias("lab"))
+        .select("v", F.col("v").alias("p"))
         .localCheckpoint(eager=False)
     )
-    # Convergence check (r10 round-overhead fix, guide §1.2): min-label
-    # propagation only ever DECREASES a label, so the label column's
-    # total is strictly monotone and the fixpoint is exactly "sum
-    # unchanged" — one shuffle-free aggregate instead of the r9 shape's
-    # per-round join of consecutive label tables. With a LAZY
-    # localCheckpoint the aggregate is also the action that
-    # materializes the round's checkpoint (the agg scans every
-    # partition), so each round runs ONE job where the r9 shape ran two
-    # (eager checkpoint + join-count). DECIMAL(38,0) keeps the sum
-    # exact for any BIGINT id universe at any node count.
-    def _lab_sum(lb: DataFrame):
-        return lb.agg(
-            F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    # r11 (guide §1.2): rounds are chained lazily in windows of
-    # CC_UNROLL with ONE materializing sum-aggregate per window
-    # boundary. Labels are monotone non-increasing, so "boundary sum
-    # unchanged since the previous boundary" ⟺ no round in the window
-    # changed any label ⟺ the window's first state was already the
-    # fixpoint; overshoot rounds past the fixpoint are no-ops (min
-    # over an unchanged neighborhood), so boundary values are the
-    # fixpoint values exactly.
+    # Convergence: hook takes a least() and shortcut replaces p by
+    # p(p) ≤ p (the p(x) ≤ x invariant holds inductively from p=v), so
+    # every parent is monotone non-increasing and "no parent changed"
+    # ⟺ "Σp unchanged" — one shuffle-free aggregate instead of a join
+    # of consecutive parent tables. With a LAZY localCheckpoint the
+    # aggregate is also the action that materializes the round's
+    # checkpoint, so each round runs ONE job. DECIMAL(38,0) keeps the
+    # sum exact for any BIGINT id universe at any node count.
     prev_sum = None
-    rounds_done = 0
-    while rounds_done < max_iterations:
-        for _ in range(min(CC_UNROLL, max_iterations - rounds_done)):
-            prop = edges.join(
-                labels.withColumnRenamed("id", "s"), "s"
-            ).select(F.col("t").alias("id"), "lab")
-            labels = (
-                labels.union(prop)
-                .groupBy("id")
-                .agg(F.min("lab").alias("lab"))
-            ).localCheckpoint(eager=False)
-            rounds_done += 1
-        new_sum = _lab_sum(labels)
+    for _ in range(max_iterations):
+        nbr_min = (
+            edges.join(
+                parents.select(F.col("v").alias("u"), F.col("p").alias("pu")),
+                "u",
+            )
+            .groupBy("v")
+            .agg(F.min("pu").alias("nm"))
+        )
+        hooked = parents.join(nbr_min, "v", "left").select(
+            "v", F.least(F.col("p"), F.coalesce("nm", F.col("p"))).alias("p")
+        )
+        parents = (
+            hooked.alias("a")
+            .join(
+                hooked.select(
+                    F.col("v").alias("p"), F.col("p").alias("pp")
+                ).alias("b"),
+                "p",
+            )
+            .select(F.col("a.v").alias("v"), F.col("pp").alias("p"))
+            .localCheckpoint(eager=False)
+        )
+        new_sum = parents.agg(
+            F.sum(F.col("p").cast("decimal(38,0)")).alias("s")
+        ).collect()[0]["s"]
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
     else:
-        # returning silently-wrong components is worse than failing:
-        # propagation needs diameter rounds, so a graph deeper than the
-        # bound must go to the round-logarithmic star variant
+        # returning silently-wrong components is worse than failing
         raise RuntimeError(
             f"duplicate_components did not converge in {max_iterations} "
-            "rounds (graph diameter exceeds the bound); use "
-            "duplicate_components_star for high-diameter graphs"
+            "rounds; raise max_iterations"
         )
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("lab").alias("component_id")
+    return parents.select(
+        F.col("v").alias("doc_id"), F.col("p").alias("component_id")
     )
+
+
+#: alias for callers that import the old dispatcher name
+#: (perfbench/workloads.py)
+duplicate_components_auto = duplicate_components
 
 
 def duplicate_components_sql(pairs_sql: str) -> str:
@@ -808,9 +820,7 @@ def dedup_survivors(
     — pass it when a composed pipeline needs the closure MORE than once
     (survivors + leakage splits both consume it; the 10M-doc composed
     stress measured the duplicated closure at 87 s / 15 GiB shuffle of
-    pure waste — tools/pipeline_stress.py, STRESS.md r8). At scale
-    prefer :func:`duplicate_components_shortcut` as the generator:
-    identical output (0 mismatches at 7M nodes), 2.1× faster there."""
+    pure waste — tools/pipeline_stress.py, STRESS.md r8)."""
     comp = components if components is not None else duplicate_components(pairs)
     losers = comp.where(F.col("doc_id") != F.col("component_id")).select(
         "doc_id"
@@ -1267,109 +1277,6 @@ def ngram_jaccard_pairs_prefix(
         .where(jac >= F.lit(threshold))
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
-
-
-def duplicate_components_star(
-
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction — same contract as :func:`duplicate_components`
-    (DataFrame[doc_id, component_id], component_id = min id), different
-    convergence behavior: O(log² n) rounds on ANY graph shape, where
-    min-label propagation needs diameter rounds.
-
-    The algorithm (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14):
-
-    - **large-star**: every node attaches its strictly-larger neighbors
-      to the minimum of its closed neighborhood;
-    - **small-star**: every node attaches its not-larger neighbors (and
-      itself) to that minimum.
-
-    Both are one groupBy-min plus one re-join per round (map-side
-    combined; only (node, node) long pairs shuffle), with per-round
-    ``localCheckpoint`` for the same lineage reason as the sibling.
-    Prefer this form when duplicate chains are long (bot-generated
-    near-identical sequences); the min-label sibling does fewer total
-    shuffles on the dense, tiny-diameter clusters typical of web dedup.
-    """
-    edges = (
-        pairs.select(F.col(doc_a).alias("u"), F.col(doc_b).alias("v"))
-        .union(pairs.select(F.col(doc_b).alias("u"), F.col(doc_a).alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    members = edges.select(F.col("u").alias("doc_id")).distinct()
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # operate on the symmetrized neighborhood (the paper's map step
-        # emits every edge in both directions)
-        sym = e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient every edge high → low, then attach each node's smaller
-        # neighbors (and the node itself) to the neighborhood minimum
-        dir_ = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).where(F.col("u") != F.col("v")).distinct()
-        mins = dir_.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        out = (
-            dir_.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        )
-        return (
-            out.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-        )
-
-    prev_sig = None
-    for _ in range(max_iterations):
-        edges = small_star(large_star(edges))
-        sig = edges.agg(
-            F.count("*").alias("n"),
-            # overflow-free order-insensitive checksum (edges are
-            # distinct, so xor cannot cancel duplicates)
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
-    else:
-        # same contract as the min-label sibling: a silently-partial
-        # contraction is a wrong answer, not a degraded one. O(log² n)
-        # rounds makes exhaustion pathological, but fail loudly anyway.
-        raise RuntimeError(
-            f"duplicate_components_star did not reach its edge-set "
-            f"fixpoint in {max_iterations} rounds; raise max_iterations"
-        )
-    # fixpoint: every edge points a node at its component min
-    labels = edges.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("component_id")
-    )
-    roots = members.join(
-        labels.select("doc_id"), "doc_id", "left_anti"
-    ).select("doc_id", F.col("doc_id").alias("component_id"))
-    return labels.union(roots)
 
 
 # ---------------------------------------------------------------------------
@@ -2375,21 +2282,10 @@ def triangle_supports(
 #: window that overshoots converges to the same values; the boundary
 #: test n_rows == n_kept is exactly the old per-round n_removed == 0.
 #: The same window pattern drives every r11-unrolled iterative loop
-#: whose convergence certificate is window-safe (monotone sums for the
-#: CC variants, idempotent-at-fixpoint peels here and in kcore).
+#: whose convergence certificate is window-safe (idempotent-at-fixpoint
+#: peels here and in kcore).
 TRUSS_UNROLL = 4
 ITER_UNROLL = TRUSS_UNROLL
-#: window size for the monotone-sum CC loops (min-label, hook+
-#: shortcut). 1 by default = the r10 per-round shape: near-dup
-#: graphs have tiny diameters, so these loops converge in a handful
-#: of rounds and the window's overshoot no-op rounds (each a real
-#: join+agg stage chain) cost more than the saved boundary
-#: aggregates — measured r11 A/B at sf0.1: U=1 beats U=4 by ~20 % on
-#: x_dedup_components_sc/_auto and is never worse. Raise for
-#: deep-diameter graphs where per-round driver barriers dominate
-#: (the window algebra is already in place and value-exact at any
-#: size).
-CC_UNROLL = 1
 
 
 def _peel_round(scored: DataFrame, thr: int) -> DataFrame:
@@ -3636,409 +3532,6 @@ SELECT DISTINCT * FROM (
   ({snm_pairs_sql(window, threshold, ngram, key_len, key_sql=rev_key)})
 )
 """
-
-
-def duplicate_components_shortcut(
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    max_iterations: int = 60,
-) -> DataFrame:
-    """Connected components via hook + pointer-doubling shortcut
-    (Shiloach & Vishkin 1982; the "two-phase" MapReduce form of
-    Kiveris et al. 2014): same contract as
-    :func:`duplicate_components` — DataFrame[doc_id, component_id],
-    component_id = min doc id — in O(log n) rounds with LINEAR
-    per-round state.
-
-    This is the fourth CC implementation, and it exists because the
-    other poly-log ones each concede something measured: min-label
-    propagation needs diameter rounds (refuses long chains), star
-    contraction is O(log² n) rounds, and Hash-to-Min's member sets
-    blow up to ~n·d/2 rows mid-convergence on paths (STRESS.md r6 —
-    OOM at 100k chain nodes). Here the state is exactly ONE (v,
-    parent) row per vertex plus the static edge list: each round (1)
-    HOOKS every vertex to the minimum parent in its closed
-    neighborhood (one edges⋈parents join + min agg) and (2)
-    SHORTCUTS parent ← parent(parent) (one parents self-join), so
-    labels travel ~2^r hops after r rounds — O(log d) rounds like
-    Hash-to-Min, linear state like star contraction. Chain A/B in
-    STRESS.md r6. Every parent value is itself a vertex id, so the
-    shortcut self-join is total; fixpoint (no parent changed) implies
-    parents are constant per component and equal to the component
-    min (hook would fire across any unequal edge, shortcut across any
-    unequal chain). ``localCheckpoint`` per round resets lineage
-    (iterative-loop rule); raises if the bound is exhausted rather
-    than returning partial labels."""
-    edges = (
-        pairs.select(F.col(doc_a).alias("v"), F.col(doc_b).alias("u"))
-        .union(
-            pairs.select(F.col(doc_b).alias("v"), F.col(doc_a).alias("u"))
-        )
-        .where(F.col("v") != F.col("u"))
-        .distinct()
-        # lazy: round 1's parent-sum aggregate materializes both
-        .localCheckpoint(eager=False)
-    )
-    parents = (
-        edges.select("v")
-        .distinct()
-        .select("v", F.col("v").alias("p"))
-        .localCheckpoint(eager=False)
-    )
-    # Convergence (r10, guide §1.2): hook takes a least() and shortcut
-    # replaces p by p(p) ≤ p (the p(x) ≤ x invariant holds inductively
-    # from p=v), so every parent is monotone non-increasing and "no
-    # parent changed" ⟺ "Σp unchanged" — one shuffle-free
-    # DECIMAL(38,0) aggregate. r11: rounds chain lazily in windows of
-    # CC_UNROLL with one boundary aggregate (same monotone-sum
-    # certificate across the whole window; overshoot rounds are
-    # no-ops); superseded window states unpersist after the boundary
-    # materializes the chain.
-    prev_sum = None
-    rounds_done = 0
-    while rounds_done < max_iterations:
-        olds = []
-        for _ in range(min(CC_UNROLL, max_iterations - rounds_done)):
-            nbr_min = (
-                edges.join(
-                    parents.select(
-                        F.col("v").alias("u"), F.col("p").alias("pu")
-                    ),
-                    "u",
-                )
-                .groupBy("v")
-                .agg(F.min("pu").alias("nm"))
-            )
-            hooked = (
-                parents.join(nbr_min, "v", "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("p"), F.coalesce("nm", F.col("p"))
-                    ).alias("p"),
-                )
-            )
-            shortcut = (
-                hooked.alias("a")
-                .join(
-                    hooked.select(
-                        F.col("v").alias("p"), F.col("p").alias("pp")
-                    ).alias("b"),
-                    "p",
-                )
-                .select(F.col("a.v").alias("v"), F.col("pp").alias("p"))
-                .localCheckpoint(eager=False)
-            )
-            olds.append(parents)
-            parents = shortcut
-            rounds_done += 1
-        new_sum = parents.agg(
-            F.sum(F.col("p").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        for o in olds:
-            o.unpersist()
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            f"duplicate_components_shortcut did not converge in "
-            f"{max_iterations} rounds"
-        )
-    return parents.select(
-        F.col("v").alias("doc_id"), F.col("p").alias("component_id")
-    )
-
-
-def duplicate_components_twophase(
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    max_iterations: int = 40,
-) -> DataFrame:
-    """Connected components via the two-phase large-star/small-star
-    alternation (Kiveris et al. 2014, "Connected Components in
-    MapReduce and Beyond", Alg. 3): same contract as
-    :func:`duplicate_components` — DataFrame[doc_id, component_id],
-    component_id = min doc id.
-
-    The fifth CC implementation, and the one whose PER-ROUND cost
-    SHRINKS: unlike hook+shortcut (which joins the STATIC edge list
-    against parents every round — the measured 58%-of-wall/72%-of-
-    shuffle stage of the 10M-doc composed pipeline, STRESS.md r8),
-    both phases here rewrite the edge list itself, and as stars form
-    the rewritten list collapses toward one (node, root) edge per
-    node — so round r+1 shuffles the CONTRACTED graph, not the input.
-
-    - **large-star** (per node u, over ALL neighbors): emit
-      (w, min(Γ⁺(u))) for every neighbor w > u — strictly-larger
-      neighbors re-hook to u's best-known minimum;
-    - **small-star** (per node u, over smaller neighbors only): emit
-      (w, m) for every w ∈ Γ⁻(u) ∪ {u} − {m}, m = min(Γ⁻(u)) —
-      u and its smaller neighbors consolidate under their minimum.
-
-    Both emissions preserve connectivity and never raise the
-    component minimum (each new edge connects two nodes through a
-    current common neighbor); at fixpoint the edge set is a star
-    forest rooted at component minima, read out as
-    (member, root) ∪ (root, root). Fixpoint = the canonical edge set
-    stops changing (exact set equality via two anti-join counts —
-    edge counts alone can coincide). ``localCheckpoint`` per round
-    resets lineage; raises on bound exhaustion rather than returning
-    partial labels."""
-    edges = (
-        pairs.select(F.col(doc_a).alias("a"), F.col(doc_b).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"),
-            F.greatest("a", "b").alias("hi"),
-        )
-        .distinct()
-        # lazy: round 1's symmetric-difference count materializes it
-        .localCheckpoint(eager=False)
-    )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # bidirect, group by center u over all neighbors
-        nbrs = e.select(
-            F.col("lo").alias("u"), F.col("hi").alias("w")
-        ).union(e.select(F.col("hi").alias("u"), F.col("lo").alias("w")))
-        m = nbrs.groupBy("u").agg(
-            F.least(F.min("w"), F.first("u")).alias("m")
-        )
-        # emit (w, m) for w > u; m <= u < w so (m, w) is canonical
-        return (
-            nbrs.join(m, "u")
-            .where(F.col("w") > F.col("u"))
-            .select(F.col("m").alias("lo"), F.col("w").alias("hi"))
-            .where(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # direct big -> small: center u = hi endpoint, Γ⁻(u) = los
-        m = e.groupBy(F.col("hi").alias("u")).agg(
-            F.min("lo").alias("m")
-        )
-        withm = e.join(m, e["hi"] == m["u"], "inner").select(
-            "lo", "hi", "m"
-        )
-        # emit (w, m) for w in Γ⁻(u) ∪ {u} − {m}: the smaller
-        # neighbors (excluding m itself) plus the center u
-        from_small = (
-            withm.where(F.col("lo") != F.col("m"))
-            .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
-        )
-        from_center = withm.select(
-            F.col("m").alias("lo"), F.col("hi").alias("hi")
-        )
-        return (
-            from_small.union(from_center)
-            .where(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-
-    for _ in range(max_iterations):
-        # LAZY checkpoint; the symmetric-difference count below is the
-        # materializing action. One full-outer join + count replaces
-        # the r9 shape's eager checkpoint + TWO anti-join counts
-        # (3 jobs → 1 per round, same exact set-equality test — edge
-        # counts alone can coincide, a one-sided anti-join can miss
-        # disappearances, but a row with either side NULL is exactly
-        # the symmetric difference). Guide §1.2: remove passes.
-        new_edges = small_star(large_star(edges)).localCheckpoint(
-            eager=False
-        )
-        diff = (
-            new_edges.select("lo", "hi", F.lit(1).alias("_n"))
-            .join(
-                edges.select("lo", "hi", F.lit(1).alias("_o")),
-                ["lo", "hi"],
-                "full_outer",
-            )
-            .where(F.col("_n").isNull() | F.col("_o").isNull())
-            .count()
-        )
-        edges.unpersist()
-        edges = new_edges
-        if diff == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_components_twophase did not converge in "
-            f"{max_iterations} rounds"
-        )
-    members = edges.select(
-        F.col("hi").alias("doc_id"), F.col("lo").alias("component_id")
-    )
-    roots = edges.select(F.col("lo").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("component_id")
-    )
-    return members.union(roots)
-
-
-def duplicate_components_auto(
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    edge_threshold: int = 2_000,
-) -> DataFrame:
-    """Closure with the variant picked by measured regime. The r10
-    quiet-host ladder (tools/cc_crossover_ab.py, production-shaped
-    trio dup graphs, STRESS.md r10) moved the crossover far below
-    the earlier estimates: two-phase wins EVERY probed rung —
-    2.2k edges 2.0 vs 3.1 s, 8.7k 2.0 vs 3.7, 26k 3.0 vs 6.9,
-    96k 4.8 vs 14.8, 293k 6.1 vs 14.5, 660k 14.4 vs 20.1, 1.06·10⁷
-    116 vs 152 s with 2.6× fewer shuffle bytes — and the only
-    remaining shortcut win is the 1.3k-edge sf0.1 fixture graph, by
-    0.45 s (2.39 vs 2.84). The r8/r9 numbers that put the crossover
-    at ~600k ("tie at 6.6·10⁵") came from contended runs: re-measured
-    quiet, the same rung reads 14.4 vs 20.1 (two-phase has more
-    stage barriers per round, so contention inflates it 1.6× where
-    shortcut moves 1.1× — the tie was an artifact). One edge count
-    decides; the threshold sits between the fixture's marginal
-    shortcut win and the first measured two-phase win, where the
-    loss surface is sub-second in both directions. Same output from
-    either side — labels are identical by the cross-implementation
-    tests.
-
-    The count MATERIALIZES ``pairs`` via ``localCheckpoint`` first, so
-    the chosen variant starts from the computed edge rows instead of
-    re-deriving the (possibly LSH-sized) lineage from scratch — the
-    dispatch count must not double the most expensive upstream stage
-    (ADVICE r8)."""
-    pairs = pairs.localCheckpoint()
-    n_edges = pairs.count()
-    if n_edges >= edge_threshold:
-        return duplicate_components_twophase(pairs, doc_a, doc_b)
-    return duplicate_components_shortcut(pairs, doc_a, doc_b)
-
-
-def duplicate_components_htm(
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    max_iterations: int = 40,
-    max_state_factor: int = 64,
-) -> DataFrame:
-    """Connected components via Hash-to-Min (Rastogi et al. 2013):
-    same contract as :func:`duplicate_components` —
-    DataFrame[doc_id, component_id], component_id = min doc id — but
-    converging in O(log n) rounds on ANY graph shape, including the
-    long chains where min-label propagation needs diameter rounds and
-    without the per-round double-join of the star-contraction variant.
-
-    State is the cluster relation (v, member): each node starts with
-    itself + its neighbors. Per round every node v with m = min(C_v)
-    (1) broadcasts m to every member of C_v and (2) ships its whole
-    C_v to m — so minima race down chains at doubling speed while
-    non-minimum nodes' sets collapse toward {m}. Fixpoint when no
-    node's min changes for a round. Per-round cost: one min
-    aggregation + one explode-shaped join on node ids. Lineage is
-    reset per round with ``localCheckpoint`` (iterative-loop rule, see
-    duplicate_components). Raises rather than returning silently-wrong
-    components if the bound is exhausted (log₂ n rounds suffice, so 40
-    covers any practical n).
-
-    MEASURED scale contract (STRESS.md r6, tools/stress_test.py
-    --cc-only): the O(log d) ROUND bound holds — 14 rounds on a
-    5,000-hop chain forest — but on long-path graphs the STATE does
-    not stay linear: every node's member set doubles per round until
-    it collapses (~min(2^r, d) members), so total state peaks at
-    ~n·d/2 rows mid-convergence (63.2M rows from a 20k-node input;
-    Java-heap OOM at 100k nodes), and wall-clock loses to star
-    contraction 210 s vs 17 s there. Use HTM where its state premise
-    holds — bounded-diameter cluster graphs like near-dup components,
-    its registered workload (`x_dedup_components_htm`) — and
-    :func:`duplicate_components_shortcut` (O(log n) rounds AND linear
-    state — 8.4 s / 18.2 s on the same 20k / 100k chains) or
-    :func:`duplicate_components_star` for unknown or adversarial
-    diameters."""
-    edges = (
-        pairs.select(F.col(doc_a).alias("v"), F.col(doc_b).alias("m"))
-        .union(
-            pairs.select(F.col(doc_b).alias("v"), F.col(doc_a).alias("m"))
-        )
-        .distinct()
-    )
-    state = (
-        edges.union(
-            edges.select("v", F.col("v").alias("m")).distinct()
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    state_bound = max(state.count(), 1) * max_state_factor
-    mins = None
-    prev_minsum = None
-    for _ in range(max_iterations):
-        cur_min = state.groupBy("v").agg(F.min("m").alias("mn"))
-        with_min = state.join(cur_min, "v")
-        # (1) min broadcast: every member u of C_v learns mn(v)
-        bcast = with_min.select(
-            F.col("m").alias("v"), F.col("mn").alias("m")
-        )
-        # (2) aggregate to min: mn(v) receives all of C_v
-        tomin = with_min.select(
-            F.col("mn").alias("v"), F.col("m")
-        )
-        state = bcast.union(tomin).distinct().localCheckpoint(
-            eager=False
-        )
-        # r10 round-overhead fix (guide §1.2): ONE aggregate job per
-        # round returns the state size (the loud blow-up gate below)
-        # AND the per-v-min total together, materializing the round's
-        # lazy checkpoint. The v-slot set is CONSTANT across rounds
-        # (every node starts as a member via its self row, tomin
-        # re-sends every member to the current min so membership never
-        # lapses, and bcast turns every member into a v-slot), and a
-        # persistent v always keeps mn(v) in its member set (the bcast
-        # row with m = v), so each v's min is monotone non-increasing
-        # over a fixed key set and "no min changed" ⟺ "Σ mins
-        # unchanged" —
-        # the same exact fixpoint the r9 shape established with a
-        # per-round join of consecutive min tables (4 jobs per round:
-        # eager state checkpoint, state count, join-count, eager mins
-        # checkpoint).
-        grp = state.groupBy("v").agg(
-            F.min("m").alias("mn"), F.count("*").alias("c")
-        )
-        row = grp.agg(
-            F.sum("c").alias("n_state"),
-            F.sum(F.col("mn").cast("decimal(38,0)")).alias("minsum"),
-        ).collect()[0]
-        # empty-input guard (r11, ADVICE): SUM over zero rows is NULL —
-        # `None > state_bound` raised where the pre-r10 shape returned
-        # an empty result. 0 never trips the gate (state_bound >= 1),
-        # and minsum None == prev None breaks to the empty `mins`.
-        n_state = row["n_state"] or 0
-        # loud state gate instead of a mid-round executor OOM: on long
-        # paths the member sets double per round (~n·d/2 peak — the
-        # measured blowup, STRESS.md r6), which no memory setting
-        # survives at scale. Raising names the safe alternatives.
-        if n_state > state_bound:
-            raise RuntimeError(
-                "duplicate_components_htm state blow-up: "
-                f"{n_state} rows > {max_state_factor}x the initial "
-                "relation — the long-path regime where Hash-to-Min's "
-                "communication is super-linear. Use "
-                "duplicate_components_shortcut (O(log n) rounds, "
-                "linear state) or duplicate_components_star instead, "
-                "or raise max_state_factor if memory allows."
-            )
-        mins = grp.select("v", "mn")
-        if row["minsum"] == prev_minsum:
-            break
-        prev_minsum = row["minsum"]
-    else:
-        raise RuntimeError(
-            f"duplicate_components_htm did not converge in "
-            f"{max_iterations} rounds"
-        )
-    return mins.select(
-        F.col("v").alias("doc_id"), F.col("mn").alias("component_id")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -378,6 +380,24 @@ def test_clean_corpus_composition(spark, sf_dir):
         docs.unpersist()
 
 
+def _union_find_labels(edges):
+    """Reference closure: {doc: min doc of its component} for every
+    doc in a pair, a self-pair's doc included."""
+    parent = {x: x for e in edges for x in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_duplicate_components_vs_union_find(spark):
     """CC operator vs a plain Python union-find on seeded random graphs —
     independent implementations must agree exactly."""
@@ -394,76 +414,82 @@ def test_duplicate_components_vs_union_find(spark):
             tuple(sorted(rng.sample(range(n_nodes), 2)))
             for _ in range(n_edges)
         ]
-        parent = list(range(n_nodes))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {v for e in edges for v in e}
-        want = {(v, find(v)) for v in touched}
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         got = {
-            (r["doc_id"], r["component_id"])
+            r["doc_id"]: r["component_id"]
             for r in duplicate_components(pairs).collect()
         }
-        assert got == want, f"seed {seed}"
+        assert got == _union_find_labels(edges), f"seed {seed}"
 
 
-def test_duplicate_components_star_matches_minlabel(spark):
-    """Star contraction vs min-label propagation vs union-find on
-    adversarial graph shapes (chains are the star algorithm's reason to
-    exist: diameter >> log² n)."""
-    import random
+def _gnp(seed, n, p):
+    rng = random.Random(seed)
+    return [
+        (a, b) for a in range(n) for b in range(a + 1, n) if rng.random() < p
+    ]
+
+
+_CC_CASES = {
+    "gnp_60": _gnp(7, 60, 0.03),
+    "gnp_120": _gnp(11, 120, 0.015),
+    "chain_80": [(i, i + 1) for i in range(300, 380)],
+    "reversed_chain": [(i + 1, i) for i in range(25)],
+    "star_forest": [
+        (h, h + j) for h in (500, 600, 700) for j in (1, 2, 3)
+    ],
+    # a 30-chain (diameter stress), two dense clusters, lone pairs
+    "adversarial_mix": (
+        [(i, i + 1) for i in range(100, 130)]
+        + [(200, x) for x in range(201, 206)] + [(202, 204)]
+        + [(300, 301), (301, 302), (300, 302)]
+        + [(400, 401), (500, 501)]
+    ),
+    "empty": [],
+    "single_edge": [(9, 3)],
+    # doc 5's only pair is with itself: still its own component
+    "self_loop_only_doc": [(5, 5), (1, 2)],
+}
+
+
+@pytest.mark.parametrize("case", list(_CC_CASES))
+def test_components_vs_union_find(spark, case):
+    """The closure and its DuckDB twin both equal the union-find
+    reference: component_id = min doc id, one row per paired doc."""
+    import duckdb
 
     from big_data_computing__spark.operators.dedup import (
         duplicate_components,
-        duplicate_components_star,
+        duplicate_components_sql,
     )
 
-    rng = random.Random(11)
-    cases = [
-        [(i, i + 1) for i in range(30)],               # chain
-        [(0, i) for i in range(1, 20)],                # star
-        [(i + 1, i) for i in range(25)],               # reversed chain
-        [tuple(rng.sample(range(80), 2)) for _ in range(60)],  # random
-    ]
-    for edges in cases:
-        df = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in edges], "doc_a long, doc_b long"
-        )
-        a = {
-            (r["doc_id"], r["component_id"])
-            for r in duplicate_components_star(df).collect()
-        }
-        b = {
-            (r["doc_id"], r["component_id"])
-            for r in duplicate_components(df).collect()
-        }
-        assert a == b and len(a) > 0
+    edges = _CC_CASES[case]
+    want = _union_find_labels(edges)
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    rows = duplicate_components(pairs).collect()
+    assert len(rows) == len(want)
+    assert {r["doc_id"]: r["component_id"] for r in rows} == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edges_in (doc_a BIGINT, doc_b BIGINT)")
+    if edges:
+        con.executemany("INSERT INTO edges_in VALUES (?, ?)", edges)
+    duck = con.execute(
+        duplicate_components_sql("SELECT doc_a, doc_b FROM edges_in")
+    ).fetchall()
+    assert dict(duck) == want
 
 
-def test_duplicate_components_star_raises_without_convergence(spark):
-    """Truncated iteration budget must raise, not return partial labels
-    (same loud-failure contract as the min-label sibling)."""
-    import pytest
-
+def test_duplicate_components_raises_on_exhaustion(spark):
+    """A truncated round budget raises instead of returning partial
+    labels."""
     from big_data_computing__spark.operators.dedup import (
-        duplicate_components_star,
+        duplicate_components,
     )
 
-    df = spark.createDataFrame(
-        [(int(i), int(i + 1)) for i in range(40)], "doc_a long, doc_b long"
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not reach"):
-        duplicate_components_star(df, max_iterations=1)
-
+    with pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_components(chain, max_iterations=1)
 
 def test_simhash_xxhash64_production_mode(spark, docs):
     """hash_mode='xxhash64' (the production fast path) must preserve
@@ -1361,41 +1387,6 @@ def test_vocab_coverage_hand_computed(spark):
     assert out[3]["coverage"] == round(8 / 9, 6)
 
 
-def test_components_htm_agrees_with_other_two_impls(spark):
-    """Four independent CC implementations (min-label propagation,
-    star contraction, hash-to-min, hook+shortcut pointer doubling)
-    must produce identical labelings on an adversarial mix: a 30-node
-    chain (diameter stress), two dense clusters, and isolated
-    pairs."""
-    from big_data_computing__spark.operators.dedup import (
-        duplicate_components,
-        duplicate_components_htm,
-        duplicate_components_shortcut,
-        duplicate_components_star,
-    )
-
-    chain = [(i, i + 1) for i in range(100, 130)]
-    dense = [(200, x) for x in range(201, 206)] + [(202, 204)]
-    dense2 = [(300, 301), (301, 302), (300, 302)]
-    lone = [(400, 401), (500, 501)]
-    pairs = spark.createDataFrame(
-        chain + dense + dense2 + lone, "doc_a long, doc_b long"
-    )
-
-    def lab(df):
-        return {
-            (r["doc_id"], r["component_id"]) for r in df.collect()
-        }
-
-    a = lab(duplicate_components(pairs))
-    b = lab(duplicate_components_star(pairs))
-    c = lab(duplicate_components_htm(pairs))
-    d = lab(duplicate_components_shortcut(pairs))
-    assert a == b == c == d
-    # spot-check the chain collapsed to one component rooted at 100
-    assert (129, 100) in c and (115, 100) in c
-
-
 def test_unigram_viterbi_matches_exhaustive_reference():
     """The trainer's Viterbi DP must pick exactly the segmentation an
     EXHAUSTIVE enumeration picks under the documented total order
@@ -1573,100 +1564,6 @@ def test_substring_seed_vocab_hand_computed(spark):
         for r in substring_seed_vocab(docs, k=5, max_piece_len=3).collect()
     ]
     assert rows == [("a", 5), ("ab", 3), ("b", 3), ("aba", 2), ("ba", 2)]
-
-
-def test_components_shortcut_random_graphs_vs_union_find(spark):
-    """Seeded random graphs (sparse G(n,p), a long chain, a star
-    forest) against a Python union-find ground truth — the shortcut
-    CC's hook/compress interleaving has no partial-labeling escape
-    hatch."""
-    import random
-
-    from big_data_computing__spark.operators.dedup import (
-        duplicate_components_shortcut,
-    )
-
-    def union_find_labels(n_ids, edge_list):
-        parent = {i: i for i in n_ids}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edge_list:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # min-label per component
-        out = {}
-        for i in n_ids:
-            r = find(i)
-            out.setdefault(r, []).append(i)
-        return {
-            i: min(members)
-            for r, members in out.items()
-            for i in members
-        }
-
-    cases = []
-    rng = random.Random(7)
-    for n, p in ((60, 0.03), (120, 0.015)):
-        cases.append(
-            [
-                (a, b)
-                for a in range(n)
-                for b in range(a + 1, n)
-                if rng.random() < p
-            ]
-        )
-    cases.append([(i, i + 1) for i in range(300, 380)])  # long chain
-    cases.append(
-        [(h, h + j) for h in (500, 600, 700) for j in (1, 2, 3)]
-    )  # star forest
-    for edge_list in cases:
-        if not edge_list:
-            continue
-        ids = sorted({x for e in edge_list for x in e})
-        want = union_find_labels(ids, edge_list)
-        pairs = spark.createDataFrame(
-            edge_list, "doc_a long, doc_b long"
-        )
-        got = {
-            r["doc_id"]: r["component_id"]
-            for r in duplicate_components_shortcut(pairs).collect()
-        }
-        assert got == want
-
-
-def test_components_htm_state_gate_raises_loudly(spark):
-    """On a long chain with a tight state budget the HTM guard must
-    raise the documented error (naming the safe alternatives) instead
-    of inflating toward an executor OOM."""
-    import pytest
-
-    from big_data_computing__spark.operators.dedup import (
-        duplicate_components_htm,
-    )
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="state blow-up.*shortcut"):
-        duplicate_components_htm(chain, max_state_factor=2)
-    # the default budget also trips on this 400-hop chain (peak state
-    # ~n·d/2 = 80k vs the 64x bound) — that IS the regime the gate is
-    # for. A bounded-diameter graph (HTM's sweet spot) completes fine:
-    short_chains = spark.createDataFrame(
-        [(i, i + 1) for i in range(400) if (i + 1) % 10 != 0],
-        "doc_a long, doc_b long",
-    )
-    out = {
-        r["doc_id"]: r["component_id"]
-        for r in duplicate_components_htm(short_chains).collect()
-    }
-    assert all(v == (k // 10) * 10 for k, v in out.items())
 
 
 def test_bpe_train_bytes_matches_sequential_reference(spark):
@@ -2527,111 +2424,3 @@ def test_incremental_probe_super_bucket_guard(spark, boilerplate_docs):
         new, corpus_sigs, max_bucket=None
     )
     assert raw.where(F.col("new_doc_id") == 50_000).count() == 1_000
-
-
-def test_components_twophase_random_graphs_vs_union_find(spark, sf_dir):
-    """The large-star/small-star alternation (fifth CC implementation)
-    against a Python union-find ground truth on the same seeded case
-    family as the shortcut test, plus the fixture pair graph against
-    the shortcut labels (mismatch count must be exactly zero)."""
-    import random
-
-    from big_data_computing__spark.operators.dedup import (
-        duplicate_components_shortcut,
-        duplicate_components_twophase,
-    )
-
-    def union_find_labels(n_ids, edge_list):
-        parent = {i: i for i in n_ids}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edge_list:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        out = {}
-        for i in n_ids:
-            out.setdefault(find(i), []).append(i)
-        return {
-            i: min(members)
-            for r, members in out.items()
-            for i in members
-        }
-
-    rng = random.Random(11)
-    cases = [
-        [
-            (a, b)
-            for a in range(80)
-            for b in range(a + 1, 80)
-            if rng.random() < 0.03
-        ],
-        [(i, i + 1) for i in range(300, 390)],  # long chain
-        [(h, h + j) for h in (500, 600, 700) for j in (1, 2, 3)],
-        [(0, 1), (1, 2), (2, 0), (10, 11)],  # triangle + edge
-    ]
-    for edge_list in cases:
-        ids = sorted({x for e in edge_list for x in e})
-        want = union_find_labels(ids, edge_list)
-        pairs = spark.createDataFrame(
-            edge_list, "doc_a long, doc_b long"
-        )
-        got = {
-            r["doc_id"]: r["component_id"]
-            for r in duplicate_components_twophase(pairs).collect()
-        }
-        assert got == want
-
-    from big_data_computing__spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from big_data_computing__spark.sources.readers import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs).localCheckpoint()
-    a = duplicate_components_shortcut(pairs)
-    b = duplicate_components_twophase(pairs)
-    assert (
-        a.join(b, "doc_id")
-        .where(a["component_id"] != b["component_id"])
-        .count()
-        == 0
-    )
-    assert a.count() == b.count()
-
-
-def test_components_auto_dispatch(spark, sf_dir):
-    """duplicate_components_auto picks by edge count and returns the
-    same labels either side of the threshold."""
-    from big_data_computing__spark.operators.dedup import (
-        duplicate_components_auto,
-        duplicate_components_shortcut,
-        minhash_lsh_pairs,
-    )
-    from big_data_computing__spark.sources.readers import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs).localCheckpoint()
-    want = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components_shortcut(pairs).collect()
-    }
-    # below threshold -> shortcut path; force the two-phase path with
-    # threshold 1 — identical labels either way
-    got_small = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components_auto(pairs).collect()
-    }
-    got_big = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components_auto(
-            pairs, edge_threshold=1
-        ).collect()
-    }
-    assert got_small == want
-    assert got_big == want

@@ -41,7 +41,7 @@ from big_data_computing__spark.operators.curation import (  # noqa: E402
 )
 from big_data_computing__spark.operators.dedup import (  # noqa: E402
     dedup_survivors,
-    duplicate_components_auto,
+    duplicate_components,
     minhash_lsh_pairs,
     minhash_lsh_pairs_sharded,
 )
@@ -229,15 +229,14 @@ def main(n_docs: int) -> None:
     # — the first run of this stress computed it twice (inside each
     # operator): s4 133 s + s5 87 s, ~15 GiB shuffle EACH; the reuse
     # is the components= parameter both operators now take. The
-    # closure itself runs the auto-dispatcher (10.6M pairs -> the
-    # large-star/small-star alternation) —
-    # the CC ladder measured on this exact graph (7.3M nodes, 10.6M
-    # pairs, same process): min-label 225.4 s, hook+shortcut
-    # 105.8-151.9 s, two-phase 116.2 s with a SHRINKING per-round
-    # edge list (STRESS.md r8); all outputs identical.
+    # closure is hook + shortcut — the CC ladder measured on this
+    # exact graph (7.3M nodes, 10.6M pairs, same process): min-label
+    # 225.4 s, hook+shortcut 105.8-151.9 s, large-star/small-star
+    # 116.2 s with 2.6x fewer shuffle bytes (STRESS.md r8); all
+    # outputs identical.
     comp = stage(
         "s4a_duplicate_components",
-        lambda: duplicate_components_auto(pairs).localCheckpoint(),
+        lambda: duplicate_components(pairs).localCheckpoint(),
     )
     survivors = stage(
         "s4b_cc_survivors",

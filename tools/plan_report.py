@@ -115,9 +115,8 @@ QUERIES = [
     "x_bpe_top_pairs",
     "x_leakage_splits",
     "x_vocab_coverage",
-    # round-6 additions (the CC variants are eager loops — excluded
-    # for the same reason as x_ktruss_edges; a14's corrected HLL and
-    # the whitened-SemDeDup composition show the new plan shapes)
+    # round-6 additions (a14's corrected HLL and the whitened-SemDeDup
+    # composition show the new plan shapes)
     "a14_approx_distinct",
     "x_pca_semdedup",
     "x_substring_seed_vocab",

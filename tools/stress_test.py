@@ -25,23 +25,11 @@ from big_data_computing__spark.session import get_session
 SF_DIR = "/root/testdata/sf0.1"
 
 
-def cc_chain_ab(n_nodes: int = 20_000, hop: int = 5_000) -> None:
-    """A/B the two poly-log CC implementations on the adversarial
-    chain forest (diameter ``hop`` — the shape where min-label
-    propagation refuses): star contraction vs Hash-to-Min.
-
-    Default is 20k nodes, NOT the 100k the star-only stress runs:
-    Hash-to-Min's per-node member sets double each round on a path
-    (round r holds ~min(2^r, d) members per node) so total state peaks
-    at ~n·d/2 rows mid-convergence — measured 63.2M rows at round 11
-    of 14 on 20k×5,000-hop (3,150× the input), and a Java-heap OOM at
-    100k nodes. The round count matches the paper's O(log d) claim;
-    the communication does not stay linear on paths (that is exactly
-    the gap Rastogi et al.'s Hash-Greater-to-Min space bound targets).
-    See STRESS.md for the full round-by-round table."""
-    spark = get_session(app_name="bdc_stress_cc")
-    spark.sparkContext.setLogLevel("ERROR")
-    results: dict[str, dict] = {}
+def cc_chain(spark, n_nodes: int = 100_000, hop: int = 5_000) -> dict:
+    """Connected components on the adversarial chain forest (diameter
+    ``hop``): hook + shortcut needs O(log hop) rounds with one parent
+    row per vertex, so the state stays linear on paths. See STRESS.md
+    for the per-variant chain A/B that picked this algorithm."""
     chains = (
         spark.range(n_nodes)
         .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
@@ -49,30 +37,13 @@ def cc_chain_ab(n_nodes: int = 20_000, hop: int = 5_000) -> None:
         .repartition(64)
         .localCheckpoint()
     )
-    for name, fn in (
-        # max_state_factor lifted: this tool MEASURES the blowup the
-        # production gate (r6) exists to refuse — with the default
-        # budget HTM raises on this forest instead of inflating
-        (
-            "htm_cc_chain",
-            lambda p: dd.duplicate_components_htm(
-                p, max_state_factor=100_000
-            ),
-        ),
-        ("star_cc_chain", dd.duplicate_components_star),
-        ("shortcut_cc_chain", dd.duplicate_components_shortcut),
-    ):
-        t0 = time.time()
-        out = fn(chains)
-        cnt = out.count()
-        n_comp = out.select("component_id").distinct().count()
-        results[name] = {
-            "nodes": cnt,
-            "components": n_comp,
-            "sec": round(time.time() - t0, 1),
-        }
-    print(json.dumps(results, indent=2))
-    spark.stop()
+    t0 = time.time()
+    out = dd.duplicate_components(chains)
+    return {
+        "nodes": out.count(),
+        "components": out.select("component_id").distinct().count(),
+        "sec": round(time.time() - t0, 1),
+    }
 
 
 def _synth_vocab_docs(spark, n_words: int):
@@ -178,7 +149,10 @@ def bpe_ab(n_words: int = 200_000) -> None:
 
 def main() -> None:
     if "--cc-only" in sys.argv:
-        cc_chain_ab()
+        spark = get_session(app_name="bdc_stress_cc")
+        spark.sparkContext.setLogLevel("ERROR")
+        print(json.dumps({"cc_100k_chain": cc_chain(spark)}, indent=2))
+        spark.stop()
         return
     if "--bpe-only" in sys.argv:
         bpe_ab()
@@ -359,20 +333,8 @@ def main() -> None:
     }
     big_emb.unpersist()
 
-    # --- star CC on a 100k-node 5k-hop chain forest (the shape the
-    # min-label sibling now refuses: diameter >> its round bound) ---
-    chains = (
-        spark.range(100_000)
-        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-        .where((F.col("doc_a") + 1) % 5000 != 0)  # break into 20 chains
-        .repartition(64)
-    )
-    t0 = time.time()
-    n_nodes = dd.duplicate_components_star(chains).count()
-    results["star_cc_100k_chain"] = {
-        "nodes": n_nodes,
-        "sec": round(time.time() - t0, 1),
-    }
+    # --- CC on a 100k-node 5k-hop chain forest (20 chains) ---
+    results["cc_100k_chain"] = cc_chain(spark)
 
     print(json.dumps(results, indent=2))
     spark.stop()

@@ -2,7 +2,10 @@
 entry at sf0.01 and hash-compare against oracle_sql() via DuckDB.
 
 Usage: python tools/verify_oracle.py [sf_dir] [only1,only2,...]
-         [--json OUT.json]
+         [--skip golden|name1,name2,...] [--json OUT.json]
+
+The summary counts only the queries that ran; skipped ones are listed
+separately. An unknown query name exits 2 before Spark starts.
 
 --json writes a per-query artifact (the committed full-registry runs,
 e.g. ORACLE_FULL_r03.json — the driver's own CORRECTNESS files cover
@@ -14,8 +17,9 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 
@@ -82,8 +86,20 @@ def type_errors(con, sql: str, spark_dtypes: list) -> list:
     return errs
 
 
-def main() -> int:
-    argv = list(sys.argv[1:])
+def plan_run(names, only=None, skip=frozenset()):
+    """Split the registry ``names`` for one run into (run, skipped,
+    unknown): ``only`` (None = all) narrows the run, ``skip`` moves
+    names out of it, and ``unknown`` lists any name given in either
+    that the registry does not have."""
+    wanted = [n for n in names if only is None or n in only]
+    run = [n for n in wanted if n not in skip]
+    skipped = [n for n in wanted if n in skip]
+    unknown = sorted((set(only or ()) | set(skip)) - set(names))
+    return run, skipped, unknown
+
+
+def main(argv=None) -> int:
+    argv = list(sys.argv[1:] if argv is None else argv)
     json_out = None
     if "--json" in argv:
         i = argv.index("--json")
@@ -120,7 +136,16 @@ def main() -> int:
         skip = GOLDEN_SF_BOUND if arg == "golden" else set(arg.split(","))
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    only = set(argv[1].split(",")) if len(argv) > 1 else None
+    qs = entrymod.queries()
+    run, skipped, unknown = plan_run(list(qs), only, skip)
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}", file=sys.stderr)
+        return 2
     results: dict[str, dict] = {}
+    for name in skipped:
+        print(f"skip {name}: result-golden pinned at another sf")
+        results[name] = {"match": None, "err": "skipped_golden"}
     spark = get_session()
     con = duckdb.connect()
     for t in TABLES:
@@ -128,20 +153,12 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    only = set(argv[1].split(",")) if len(argv) > 1 else None
     failures = []
-    for name, fn in qs.items():
-        if only is not None and name not in only:
-            continue
-        if name in skip:
-            print(f"skip {name}: result-golden pinned at another sf")
-            results[name] = {"match": None, "err": "skipped_golden"}
-            continue
+    for name in run:
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = qs[name](spark, sf_dir)
             srows = sorted(
                 tuple(r) for r in sdf.select(sorted(sdf.columns)).collect()
             )
@@ -206,9 +223,10 @@ def main() -> int:
             donly = [r for r in drows if r not in srows][:2]
             print(f"     spark-only: {sonly}")
             print(f"     duck-only:  {donly}")
+    n_oracled = sum(1 for n in run if n in oracles)
     print(
-        f"\n{len(qs) - len(failures)}/{len(qs)} queries pass "
-        f"({len(oracles)} oracle-checked)"
+        f"\n{len(run) - len(failures)}/{len(run)} queries pass "
+        f"({n_oracled} oracle-checked, {len(skipped)} skipped)"
     )
     if json_out is not None:
         with open(json_out, "w") as f:
